@@ -194,15 +194,20 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
               // removed. (Single-mode master stays a current-run
               // snapshot — reference parity; sharded master tracks the
               // merged entry set, which is what a lake-scale consumer
-              // needs.)
-              val mergedEntries = KeyedJsonSink.readSharded(spark, shardedDir)
-              KeyedJsonSink.mergeSharded(
-                mergedEntries.select(col("uid"), lit("en-us").as("locale")),
-                "uid", s"$outDir/master/entries/$m-sharded")
-              Files.deleteIfExists(Paths.get(s"$outDir/master/entries/$m.json"))
-              // parity with writeSingle's return contract: the MERGED
-              // entry count (one shard line per key after compaction)
-              KeyedJsonSink.readSharded(spark, shardedDir).count()
+              // needs.) The merged uids are read once and cached: the
+              // count is writeSingle's return contract (the MERGED entry
+              // count, one shard line per key after compaction), and it
+              // sizes the manifest's shards from the uids alone.
+              val mergedUids = KeyedJsonSink.readSharded(spark, shardedDir)
+                .select(col("uid")).cache()
+              try {
+                val merged = mergedUids.count()
+                KeyedJsonSink.mergeSharded(
+                  mergedUids.select(col("uid"), lit("en-us").as("locale")),
+                  "uid", s"$outDir/master/entries/$m-sharded")
+                Files.deleteIfExists(Paths.get(s"$outDir/master/entries/$m.json"))
+                merged
+              } finally { mergedUids.unpersist(); () }
             }
           logger.log(s"Exported $m", Map("entries" -> n))
           n

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
 import java.util.concurrent.{ConcurrentHashMap, Semaphore}
 
 import org.apache.spark.sql.DataFrame
@@ -110,20 +110,38 @@ object HttpFetchSink {
     if (bad) s"asset-$id" else name
   }
 
+  /** Delete the temp files a killed write left in a per-id asset dir
+    * (each per-id dir holds one asset, so every `.*.tmp` there is its). */
+  private def sweepTemps(dir: Path): Unit =
+    if (Files.isDirectory(dir)) {
+      val s = Files.list(dir)
+      try s.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith(".") && n.endsWith(".tmp")
+      }.forEach(p => Files.deleteIfExists(p))
+      finally s.close()
+    }
+
   /** Fetch each (id, url) row to `destDir/<id>/<filename>`.
     *
-    * Runs as a distributed transform (`mapPartitions`): fetches are
-    * bounded by an executor-wide semaphore (see [[gate]]), retried once,
-    * and files that already exist are skipped (idempotent re-runs).
-    * Returns a result DataFrame; callers split it into success manifest
-    * and dead-letter (S10) via [[deadLetter]]. */
+    * Runs as a distributed transform (`mapPartitions`) over the rows
+    * hash-partitioned on id into `defaultParallelism` tasks (a one-file
+    * source would otherwise be one task, leaving the gate idle; hashing
+    * keeps task retries deterministic). Fetches are bounded by an
+    * executor-wide semaphore (see [[gate]]), retried once, and written
+    * through a temp file + atomic move, so a file that exists is
+    * complete and is skipped (idempotent re-runs); temp files of killed
+    * attempts are swept before the re-fetch. Returns a result DataFrame;
+    * callers split it into success manifest and dead-letter (S10) via
+    * [[deadLetter]]. */
   def fetch(assets: DataFrame, idCol: String, urlCol: String, destDir: String,
             fetcher: Fetcher, concurrency: Int = 2,
             retries: Int = 1): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
     val gateKey = s"$destDir#$concurrency"
-    assets.select(col(idCol).cast("long"), col(urlCol).cast("string"))
+    assets.select(col(idCol).cast("long").as("id"), col(urlCol).cast("string"))
+      .repartition(spark.sparkContext.defaultParallelism, col("id"))
       .as[(Long, String)]
       .mapPartitions { rows =>
         rows.map { case (id, url) =>
@@ -133,6 +151,7 @@ object HttpFetchSink {
           if (Files.exists(target)) // assets.js:78-80 idempotent skip
             FetchResult(id, url, target.toString, ok = true, skipped = true, "")
           else {
+            sweepTemps(dir)
             val g = gate(gateKey, concurrency)
             var result: Either[String, Array[Byte]] = Left("not attempted")
             var attempt = 0
@@ -146,8 +165,10 @@ object HttpFetchSink {
             }
             result match {
               case Right(bytes) =>
-                Files.createDirectories(dir)
-                Files.write(target, bytes)
+                // a speculative twin may have swept this attempt's temp
+                // file; if its own copy is already in place, so is ours
+                try AtomicFile.write(target, bytes)
+                catch { case _: NoSuchFileException if Files.exists(target) => }
                 FetchResult(id, url, target.toString, ok = true,
                   skipped = false, "")
               case Left(err) =>

@@ -1,11 +1,13 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 
 /** S7/S8 — keyed-JSON entry sink: a single JSON object keyed by uid, not
@@ -23,7 +25,10 @@ import org.apache.spark.sql.functions._
   *    so a crash mid-write cannot corrupt existing state.
   *  - [[writeSharded]]: the scale path — entries stay distributed, hashed
   *    into N shard files of JSON-lines (uid TAB json), mergeable by
-  *    re-sharding on uid. Compaction = groupBy shard with last-wins.
+  *    re-sharding on uid. Compaction = groupBy shard with last-wins. N
+  *    follows the bytes being written (see [[sizedShards]]): one shard
+  *    per Spark read split, so a few MB land in one file and 100 TB in
+  *    ~128 MB shards.
   */
 object KeyedJsonSink {
 
@@ -168,21 +173,6 @@ object KeyedJsonSink {
   private def escapeKey(k: String): String =
     "\"" + k.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
-  /** Temp-file + atomic rename so readers never observe a half-written
-    * state file and a crash can't destroy the previous one. */
-  private def atomicWrite(path: Path, content: String): Unit = {
-    Files.createDirectories(path.getParent)
-    val tmp = Files.createTempFile(path.getParent,
-      "." + path.getFileName.toString, ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    try Files.move(tmp, path,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    catch {
-      case _: AtomicMoveNotSupportedException =>
-        Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
   /** Merge `entries` into the keyed-JSON file at `path` (new rows win;
     * `removeKeys` are dropped — the dead-letter remove-on-success path,
     * reference assets.js:135-137), write pretty-printed atomically,
@@ -209,16 +199,51 @@ object KeyedJsonSink {
     val body = merged
       .map { case (k, v) => escapeKey(k) + ": " + v }
       .mkString("{", ", ", "}")
-    atomicWrite(p, if (prettyPrint) pretty(body) else body)
+    AtomicFile.write(p, (if (prettyPrint) pretty(body) else body)
+      .getBytes(StandardCharsets.UTF_8))
     merged.length.toLong
   }
 
   /** Scale path: distributed JSON-lines shards keyed by uid hash. Merging
     * a delta = union previous shards + delta, last-wins on uid, rewrite
-    * (one shuffle, no driver materialization) — see [[mergeSharded]]. */
+    * (one shuffle, no driver materialization) — see [[mergeSharded]].
+    * `shards` > 0 pins the shard count; the default sizes it from the
+    * entries ([[sizedShards]]). */
   def writeSharded(entries: DataFrame, uidCol: String, dir: String,
-                   shards: Int = 64): Unit =
-    writeShardFiles(keyed(entries, uidCol), dir, shards)
+                   shards: Int = 0): Unit = {
+    val n = if (shards > 0) shards else sizedShards(entries, 0L)
+    writeShardFiles(keyed(entries, uidCol).repartition(n, col("uid")), dir, n)
+  }
+
+  /** Shard count when Catalyst cannot size the delta (its estimate is
+    * `spark.sql.defaultSizeInBytes`, i.e. unknown). */
+  private val UnsizedShards = 64
+
+  /** Shard count for writing `delta` plus `priorBytes` already on disk:
+    * ceil(bytes / Spark's read-split size), the split size being
+    * `FilePartition.maxSplitBytes` = min(maxPartitionBytes,
+    * max(openCostInBytes, bytes / defaultParallelism)). A small write is
+    * one shard — one task, one file — instead of a fixed fan-out of
+    * near-empty ones; a large one spreads across the cores, and shards
+    * never outgrow a read split. The delta's bytes are Catalyst's
+    * estimate, which is the measured in-memory size for a cached,
+    * materialized frame. */
+  private def sizedShards(delta: DataFrame, priorBytes: Long): Int = {
+    val spark = delta.sparkSession
+    val est = delta.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est >= spark.sessionState.conf.defaultSizeInBytes) UnsizedShards
+    else {
+      val bytes = (est + priorBytes).min(Long.MaxValue).toLong
+      val shardBytes = FilePartition.maxSplitBytes(spark, bytes)
+      math.max(1, math.ceil(bytes.toDouble / shardBytes).toInt)
+    }
+  }
+
+  /** Bytes of the shard files under `dir` (a listing, no read). */
+  private def shardBytes(fs: FileSystem, dir: HPath): Long =
+    if (!fs.exists(dir)) 0L
+    else fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-"))
+      .map(_.getLen).sum
 
   /** Sidecar file recording the writer's shard count, so readers
     * ([[graft.sources.KeyedJsonSource]]) can prune shards without
@@ -228,15 +253,21 @@ object KeyedJsonSink {
     * Spark's file listing (and to [[readSharded]]). */
   private[graft] val ShardSidecar = "_graft_shards"
 
-  private def writeShardFiles(keyedDf: DataFrame, dir: String,
+  /** Write `sharded` — (uid, json) rows hash-partitioned on uid into
+    * `shards` partitions, so shard file `part-i` holds the uids with
+    * pmod(murmur3(uid), shards) = i — and the sidecar. The sidecar is
+    * written after the job commits, so it marks a complete write and the
+    * committer's `_SUCCESS` marker is left out. */
+  private def writeShardFiles(sharded: DataFrame, dir: String,
                               shards: Int): Unit = {
-    keyedDf
-      .repartition(shards, col("uid"))
+    sharded
       .select(concat_ws("\t", col("uid"), col("json")).as("value"))
-      .write.mode(SaveMode.Overwrite).text(dir)
-    val hPath = new org.apache.hadoop.fs.Path(dir, ShardSidecar)
+      .write.mode(SaveMode.Overwrite)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .text(dir)
+    val hPath = new HPath(dir, ShardSidecar)
     val fs = hPath.getFileSystem(
-      keyedDf.sparkSession.sessionState.newHadoopConf())
+      sharded.sparkSession.sessionState.newHadoopConf())
     val out = fs.create(hPath, true)
     try out.write(shards.toString.getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -259,20 +290,24 @@ object KeyedJsonSink {
     * [[writeSingle]] keeps an arbitrary collected row), drop
     * `removeKeys` (the remove-on-success contract, as an anti-join
     * instead of a driver-side Set), and rewrite compacted shards.
-    * One shuffle over existing ∪ delta; nothing materializes on the
-    * driver. The swap is write-to-temp + backup-rename — not atomic
-    * like [[atomicWrite]]'s file move (no Hadoop FS offers an atomic
-    * directory swap), so concurrent readers must tolerate a brief
-    * absence; every crash window leaves a recoverable copy (`.old` or
-    * `.tmp-*`), never zero. */
+    * `shards` > 0 pins the shard count; the default sizes it from the
+    * prior shard files, the legacy file and the delta ([[sizedShards]]),
+    * so the count can shrink or grow from merge to merge (the sidecar
+    * follows). One shuffle over existing ∪ delta — on (shards, uid),
+    * which both the last-wins aggregate and the shard write reuse;
+    * nothing materializes on the driver. The swap is write-to-temp +
+    * backup-rename — not atomic like [[AtomicFile]]'s file move (no
+    * Hadoop FS offers an atomic directory swap), so concurrent readers
+    * must tolerate a brief absence; every crash window leaves a
+    * recoverable copy (`.old` or `.tmp-*`), never zero. */
   def mergeSharded(delta: DataFrame, uidCol: String, dir: String,
-                   shards: Int = 64,
+                   shards: Int = 0,
                    removeKeys: Option[DataFrame] = None,
                    legacyFile: Option[String] = None): Unit = {
     val spark = delta.sparkSession
-    val hPath = new org.apache.hadoop.fs.Path(dir)
+    val hPath = new HPath(dir)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val oldPath = new org.apache.hadoop.fs.Path(dir + ".old")
+    val oldPath = new HPath(dir + ".old")
     // self-heal a crash that landed between the two swap renames below:
     // the previous state is parked at .old — restore it BEFORE reading,
     // or this merge would silently rebuild from the delta alone and the
@@ -299,7 +334,14 @@ object KeyedJsonSink {
       (if (fs.exists(hPath))
         Seq(readSharded(spark, dir).withColumn("src", lit(0))) else Nil))
       .foldLeft(fresh)(_ unionByName _)
+    val n =
+      if (shards > 0) shards
+      else sizedShards(delta,
+        shardBytes(fs, hPath) + legacyPath.fold(0L)(Files.size(_)))
     val merged = unioned
+      // the merge's one exchange: the last-wins aggregate and the
+      // anti-join keep this partitioning, so it is the shard layout
+      .repartition(n, col("uid"))
       .groupBy(col("uid"))
       .agg(max(struct(col("src"), col("json"))).as("w"))
       .select(col("uid"), col("w.json").as("json"))
@@ -311,9 +353,9 @@ object KeyedJsonSink {
     // new state is in place, so no crash window loses BOTH copies (a
     // crash can leave .old or a .tmp-* behind — recoverable, never
     // empty). Hadoop FS has no atomic directory swap to do better.
-    val tmp = new org.apache.hadoop.fs.Path(
+    val tmp = new HPath(
       dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    writeShardFiles(kept, tmp.toString, shards)
+    writeShardFiles(kept, tmp.toString, n)
     fs.delete(oldPath, true)
     val hadPrev = fs.exists(hPath)
     if (hadPrev && !fs.rename(hPath, oldPath))
@@ -332,7 +374,7 @@ object KeyedJsonSink {
       .orderBy("uid").collect().map(_.getString(0))
     val inner = uids.map(u => escapeKey(u) + ": \"\"").mkString("{", ", ", "}")
     val out = pretty(s"""{"$locale": $inner}""")
-    atomicWrite(Paths.get(path), out)
+    AtomicFile.write(Paths.get(path), out.getBytes(StandardCharsets.UTF_8))
     uids.length.toLong
   }
 }

@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sinks.{HttpFetchSink, KeyedJsonSink}
@@ -41,6 +43,63 @@ class SinkHardeningSpec extends AnyFunSuite {
     assert(results.filter("ok").count() == 64)
     assert(FetchProbe.maxInFlight.get() <= 2,
       s"observed ${FetchProbe.maxInFlight.get()} concurrent fetches, bound was 2")
+  }
+
+  test("fetch fills its gate even from a single-partition input") {
+    FetchProbe.reset()
+    val fetcher: HttpFetchSink.Fetcher = _ => {
+      FetchProbe.enter()
+      try { Thread.sleep(50); Right(Array[Byte](1)) }
+      finally FetchProbe.exit()
+    }
+    val dest = Files.createTempDirectory("fetchfill").toString
+    // one input partition: a one-file attachments table
+    val assets = (1L to 32L).map(i => (i, s"http://x/img-$i.jpg"))
+      .toDF("uid", "url").coalesce(1)
+    assert(assets.rdd.getNumPartitions == 1)
+    val results = HttpFetchSink.fetch(assets, "uid", "url", dest, fetcher,
+      concurrency = 2)
+    assert(results.filter("ok").count() == 32)
+    assert(FetchProbe.maxInFlight.get() == 2,
+      s"observed ${FetchProbe.maxInFlight.get()} concurrent fetches, gate was 2")
+  }
+
+  test("a killed fetch's temp file is swept and the asset re-fetched byte-exact") {
+    val dest = Files.createTempDirectory("fetchatomic")
+    val body = Array.tabulate[Byte](4096)(i => (i * 31).toByte)
+    // what a task killed mid-write leaves: a partial temp file, no asset
+    val idDir = Files.createDirectories(dest.resolve("5"))
+    Files.write(idDir.resolve(".img.jpg4711.tmp"), body.take(100))
+    val fetcher: HttpFetchSink.Fetcher = _ => Right(body)
+    val assets = Seq((5L, "http://x/a/img.jpg")).toDF("uid", "url")
+    def run() = HttpFetchSink.fetch(assets, "uid", "url", dest.toString,
+      fetcher).collect().head
+    val r = run()
+    assert(r.getAs[Boolean]("ok") && !r.getAs[Boolean]("skipped"))
+    assert(Files.readAllBytes(idDir.resolve("img.jpg")).sameElements(body))
+    val left = Files.list(idDir)
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSeq ==
+      Seq("img.jpg"))
+    finally left.close()
+    // the complete file is then trusted by the idempotent skip
+    assert(run().getAs[Boolean]("skipped"))
+  }
+
+  test("a failed atomic write deletes its temp file and keeps the old state") {
+    val dir = Files.createTempDirectory("atomicfail")
+    // a non-empty directory where the manifest file should be: the final
+    // move fails after the temp file was written
+    val path = dir.resolve("state.json")
+    Files.createDirectories(path.resolve("blocker"))
+    intercept[java.io.IOException] {
+      KeyedJsonSink.writeMasterManifest(Seq("k").toDF("uid"), "uid",
+        path.toString)
+    }
+    val names = Files.list(dir)
+    try assert(names.iterator().asScala.map(_.getFileName.toString).toSeq ==
+      Seq("state.json"))
+    finally names.close()
+    assert(Files.isDirectory(path.resolve("blocker")))
   }
 
   test("filename sanitization: traversal, query strings, empty segments") {
@@ -164,6 +223,108 @@ class SinkHardeningSpec extends AnyFunSuite {
     assert(got == Set("a", "b", "c"),
       s"expected pre-crash state recovered from .old, got $got")
     assert(!Files.exists(Paths.get(shardDir + ".old")))
+  }
+
+  /** (`part-*` file count, sidecar shard count) of the shards at `dir`,
+    * after checking the layout contract: every uid in `part-i` hashes to
+    * shard i under the sidecar's count. */
+  private def shardLayout(dir: String): (Int, Int) = {
+    val sidecar = new String(Files.readAllBytes(
+      Paths.get(dir, KeyedJsonSink.ShardSidecar)), StandardCharsets.UTF_8)
+      .trim.toInt
+    val s = Files.list(Paths.get(dir))
+    val parts = try s.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    finally s.close()
+    parts.foreach { p =>
+      val i = p.getFileName.toString.stripPrefix("part-").take(5).toInt
+      Files.readAllLines(p).asScala.foreach { line =>
+        val uid = line.substring(0, line.indexOf('\t'))
+        assert(graft.sources.KeyedJsonSource.shardOf(uid, sidecar) == i,
+          s"uid $uid in ${p.getFileName} of $sidecar shards")
+      }
+    }
+    (parts.size, sidecar)
+  }
+
+  test("mergeSharded sizes its shard count from the data: shrinks, then grows") {
+    val dir = Files.createTempDirectory("shardsize").resolve("state").toString
+    // small split sizes so a few tens of KB span several shards; no
+    // broadcast, so the removeKeys anti-join below is a shuffled join
+    val confs = Map("spark.sql.files.maxPartitionBytes" -> "16k",
+      "spark.sql.files.openCostInBytes" -> "1k",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val base = (0 until 1000).map(i => (i.toString, s"name-$i", i * 2))
+        .toDF("uid", "name", "score")
+      KeyedJsonSink.writeSharded(base, "uid", dir, shards = 8)
+      assert(shardLayout(dir) == (8, 8))
+
+      KeyedJsonSink.mergeSharded(Seq(("42", "renamed", -1))
+        .toDF("uid", "name", "score"), "uid", dir)
+      val (parts, small) = shardLayout(dir)
+      assert(small > 1 && small < 8, s"a small merge kept $small shards")
+      assert(parts == small)
+      // the rewritten sidecar still prunes a point lookup to one file
+      val lookup = spark.read.format("graft.sources.KeyedJsonSource")
+        .option("path", dir).load().filter($"uid" === "42")
+      assert(lookup.rdd.getNumPartitions == 1)
+      val rows = lookup.collect()
+      assert(rows.length == 1 && rows.head.getString(1).contains("\"renamed\""))
+
+      KeyedJsonSink.mergeSharded((1000 until 11000)
+        .map(i => (i.toString, s"name-$i", i)).toDF("uid", "name", "score"),
+        "uid", dir, removeKeys = Some(Seq("7").toDF("uid")))
+      val (_, grown) = shardLayout(dir)
+      assert(grown > small, s"growing the state kept $grown shards")
+      assert(KeyedJsonSink.readSharded(spark, dir).count() == 10999)
+    } finally confs.keys.foreach(spark.conf.unset)
+  }
+
+  test("mergeSharded shuffles once: the aggregate and the write share it") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+      case qs: QueryStageExec => qs +: nodes(qs.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val dir = Files.createTempDirectory("shardonce").resolve("state").toString
+    KeyedJsonSink.writeSharded((1 to 100).map(i => (s"k$i", i)).toDF("uid", "n"),
+      "uid", dir, shards = 4)
+    // the merge writes its new state under `<dir>.tmp-*`
+    def mergeWrite(qe: QueryExecution): Boolean = nodes(qe.executedPlan).exists {
+      case w: DataWritingCommandExec => w.cmd match {
+        case c: InsertIntoHadoopFsRelationCommand =>
+          c.outputPath.getName.startsWith("state.tmp-")
+        case _ => false
+      }
+      case _ => false
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (mergeWrite(qe)) seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      KeyedJsonSink.mergeSharded((90 to 120).map(i => (s"k$i", -i))
+        .toDF("uid", "n"), "uid", dir)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.size == 1, "the merge's write was not observed")
+    val plan = seen.peek().executedPlan
+    assert(nodes(plan).count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
+      s"expected one exchange per merge:\n$plan")
+    assert(KeyedJsonSink.readSharded(spark, dir).count() == 120)
   }
 
   test("HttpFetcher honors the 60s-contract against a live local server") {
