@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{HttpFetchSink, JsonLogger, KeyedJsonSink}
+import graft.sinks.KeyedJsonSink.{Output, Sharded, SingleFile}
 import graft.sources.{ContentTypeCatalog, IdListSource, WpCatalog}
 
 /** §3 entry-point parity: run all modules, one module, or one module
@@ -24,11 +25,12 @@ import graft.sources.{ContentTypeCatalog, IdListSource, WpCatalog}
   * module writes winston-parity JSON-lines progress/error logs (S11)
   * under `outDir`/logs.
   *
-  * `maxDriverManifest` bounds driver-side failure handling: at most that
-  * many failed fetches go through the reference-contract collect +
-  * single-file wp_failed.json; past it the dead-letter manifest is merged
-  * distributed ([[KeyedJsonSink.mergeSharded]]) with remove-on-success as
-  * an anti-join — no driver materialization at lake scale.
+  * Each output — a module's entries, the ok assets, the wp_failed
+  * dead-letter manifest — goes through one [[KeyedJsonSink.merge]] call,
+  * with `maxDriverManifest` as its driver bound: up to that many delta
+  * rows go through the reference-contract single file; past it, or once
+  * sharded state exists, the output is merged distributed and nothing
+  * materializes on the driver at lake scale.
   */
 final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
                          fetcher: HttpFetchSink.Fetcher,
@@ -40,7 +42,7 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
 
   val modules: Seq[String] = contentTypesDir match {
     case Some(d) => "assets" +: ContentTypeCatalog.priority(d)
-    case None => Seq("assets", "authors", "categories", "posts")
+    case None => ExportMain.modulesList
   }
 
   private def conform(df: DataFrame, module: String): DataFrame =
@@ -66,19 +68,9 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
       df.join(broadcast(ids), key === ids("id"), "left_semi")
     }
 
-  /** Sharded state lives on whatever filesystem `outDir` names — check
-    * through Hadoop FS, not java.nio (an `hdfs://`/`s3a://` outDir would
-    * otherwise always read as absent and break sharded-mode stickiness).
-    * Single-file state (writeSingle, logs) is driver-local by contract
-    * and stays on java.nio. */
-  private def shardedExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Run one module end-to-end: entries → keyed-JSON sink + master
-    * manifest (+ asset fetch & dead-letter for assets). Returns entry
-    * count. */
+  /** Run one module end-to-end: entries → keyed-JSON merge + master
+    * manifest (+ asset fetch & dead-letter for assets). Returns the
+    * merged entry count. */
   def runModule(module: String, idFile: Option[String] = None): Long = {
     val logger = new JsonLogger(s"$outDir/logs", module)
     val df = restrict(conform(entries(module), module), module, idFile).cache()
@@ -86,129 +78,84 @@ final class Orchestrator(spark: SparkSession, cat: WpCatalog, outDir: String,
       module match {
         case "assets" =>
           // localCheckpoint (eager) materializes the fetch results ONCE
-          // and truncates lineage: the downstream actions (ok-join,
-          // succeeded set, failure log, dead-letter merge) can never
+          // and truncates lineage: the downstream actions (counts,
+          // ok-join, succeeded set, dead-letter merge) can never
           // re-execute the side-effecting fetcher — a cache() could, if
           // partitions were evicted, re-hitting every failed URL per
           // action and desyncing the success/failure views.
           val results = HttpFetchSink.fetch(df, "uid", "url",
             s"$outDir/assets", fetcher).localCheckpoint(true)
           try {
-            val okAssets = df.join(
-              results.filter(col("ok")).select(col("id").cast("string").as("uid")),
-              "uid", "left_semi")
-            val okCount = results.filter(col("ok")).count()
-            val failed = results.filter(!col("ok")).count()
-            // the ok-asset entries file is a driver materialization too:
-            // same scale split as every other entries sink.
-            val assetsShardedDir = s"$outDir/assets/sharded"
-            val n =
-              if (okCount <= maxDriverManifest && !shardedExists(assetsShardedDir))
-                KeyedJsonSink.writeSingle(okAssets, "uid",
-                  s"$outDir/assets/assets.json")
-              else {
-                KeyedJsonSink.mergeSharded(okAssets, "uid", assetsShardedDir,
-                  legacyFile = Some(s"$outDir/assets/assets.json"))
-                KeyedJsonSink.readSharded(spark, assetsShardedDir).count()
-              }
-            val shardedDir = s"$outDir/master/wp_failed"
-            val shardedState = shardedExists(shardedDir)
+            val counts = results
+              .agg(count_if(col("ok")), count_if(!col("ok"))).head()
+            val (okCount, failed) = (counts.getLong(0), counts.getLong(1))
+            val okIds = results.filter(col("ok"))
+              .select(col("id").cast("string").as("uid"))
+            val assetsOut = Output(s"$outDir/assets/assets.json",
+              s"$outDir/assets/sharded")
+            val n = KeyedJsonSink.merge(df.join(okIds, "uid", "left_semi"),
+                "uid", assetsOut, okCount, maxDriverManifest) match {
+              case SingleFile(_, merged) => merged
+              case Sharded =>
+                KeyedJsonSink.readSharded(spark, assetsOut.dir).count()
+            }
             // remove-on-success (reference assets.js:135-137): an id that
-            // fetched OK this run — fresh or idempotent-skip — must drop
-            // out of any stale wp_failed state before the new failures
-            // merge in. Once the manifest has gone sharded it stays
-            // sharded (healed ids must anti-join out of the shard state
-            // even on a run with few fresh failures).
-            if (failed <= maxDriverManifest && !shardedState) {
-              // reference-contract path: the single pretty-printed
-              // wp_failed.json and a per-asset error log line. Only ids
-              // ALREADY IN the prior manifest need the remove-on-success
-              // set — collecting every succeeded id would materialize
-              // the whole (possibly huge) corpus on the driver to heal a
-              // manifest bounded at maxDriverManifest keys.
-              val failedFile = s"$outDir/master/wp_failed.json"
-              val priorFailed: Set[String] =
-                if (Files.exists(Paths.get(failedFile)))
-                  KeyedJsonSink.topLevelEntries(new String(
-                    Files.readAllBytes(Paths.get(failedFile)), "UTF-8"))
-                    .map(_._1).toSet
-                else Set.empty
-              val healed: Set[String] =
-                if (priorFailed.isEmpty) Set.empty
-                else results.filter(col("ok") &&
-                    col("id").cast("string").isin(priorFailed.toSeq: _*))
-                  .select(col("id").cast("string"))
-                  .collect().map(_.getString(0)).toSet
-              val failures = HttpFetchSink.deadLetter(results)
-                .select(col("id"), col("url"), col("error")).collect()
-              failures.foreach(r => logger.error("Failed to download asset",
-                Map("id" -> r.getLong(0), "url" -> r.getString(1),
-                  "error" -> r.getString(2))))
-              KeyedJsonSink.writeSingle(
+            // fetched OK this run — fresh or idempotent-skip — drops out
+            // of any stale wp_failed state as the new failures merge in.
+            val failedOut = Output(s"$outDir/master/wp_failed.json",
+              s"$outDir/master/wp_failed")
+            KeyedJsonSink.merge(
                 HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
-                "uid", failedFile, removeKeys = healed)
-            } else {
-              // lake path: NOTHING materializes on the driver. The failure
-              // manifest lives as sharded keyed JSON; remove-on-success is
-              // an anti-join against the succeeded ids inside the same
-              // distributed merge. The error log carries the aggregate
-              // count — a per-row log line at this scale IS a driver
-              // materialization in disguise.
-              val succeededIds = results.filter(col("ok"))
-                .select(col("id").cast("string").as("uid"))
-              KeyedJsonSink.mergeSharded(
-                HttpFetchSink.deadLetter(results).withColumn("uid", col("id")),
-                "uid", shardedDir,
-                removeKeys = Some(succeededIds),
-                legacyFile = Some(s"$outDir/master/wp_failed.json"))
-              if (failed > 0)
+                "uid", failedOut, failed, maxDriverManifest,
+                removeKeys = Some(okIds)) match {
+              // one error line per failed asset; the entry's JSON is the
+              // reference's {id, url, error} log object
+              case SingleFile(rows, _) => rows.foreach { case (_, json) =>
+                logger.error("Failed to download asset", json) }
+              // at lake scale a per-row log line IS a driver
+              // materialization in disguise: log the aggregate count
+              case Sharded => if (failed > 0)
                 logger.error("Failed to download assets",
-                  Map("failed" -> failed, "manifest" -> shardedDir))
+                  Map("failed" -> failed, "manifest" -> failedOut.dir))
             }
             logger.log(s"Exported assets", Map("entries" -> n,
               "failed" -> failed))
             n
           } finally { results.unpersist(); () }
         case m =>
-          // same scale split as the failure manifest: the single
-          // pretty-printed import file (reference contract) is a driver
-          // materialization, bounded by maxDriverManifest; past it (or
-          // once sharded state exists) entries and the locale manifest
-          // merge distributed as sharded keyed JSON.
-          val entryCount = df.count()
-          val shardedDir = s"$outDir/entries/$m/sharded"
-          val n =
-            if (entryCount <= maxDriverManifest && !shardedExists(shardedDir)) {
-              val merged = KeyedJsonSink.writeSingle(df, "uid",
-                s"$outDir/entries/$m/en-us.json")
-              KeyedJsonSink.writeMasterManifest(df, "uid",
-                s"$outDir/master/entries/$m.json")
+          // the count also materializes the cache, so a sharded merge
+          // sizes its shards from the measured bytes
+          val entriesOut = Output(s"$outDir/entries/$m/en-us.json",
+            s"$outDir/entries/$m/sharded")
+          val manifest = s"$outDir/master/entries/$m"
+          val n = KeyedJsonSink.merge(df, "uid", entriesOut, df.count(),
+              maxDriverManifest) match {
+            case SingleFile(_, merged) =>
+              KeyedJsonSink.writeMasterManifest(df, "uid", s"$manifest.json")
               merged
-            } else {
-              KeyedJsonSink.mergeSharded(df, "uid", shardedDir,
-                legacyFile = Some(s"$outDir/entries/$m/en-us.json"))
+            case Sharded =>
               // the sharded master manifest derives from the MERGED
-              // entry state, so uids written by earlier small-mode runs
-              // (absorbed via legacyFile) are never lost across the
-              // mode transition; the superseded single master file is
-              // removed. (Single-mode master stays a current-run
-              // snapshot — reference parity; sharded master tracks the
-              // merged entry set, which is what a lake-scale consumer
-              // needs.) The merged uids are read once and cached: the
-              // count is writeSingle's return contract (the MERGED entry
-              // count, one shard line per key after compaction), and it
-              // sizes the manifest's shards from the uids alone.
-              val mergedUids = KeyedJsonSink.readSharded(spark, shardedDir)
+              // entry state, so uids written by earlier single-file runs
+              // (absorbed by the merge) are never lost across the arm
+              // transition; the superseded single master file is
+              // removed. (The single-file master stays a current-run
+              // snapshot — reference parity; the sharded master tracks
+              // the merged entry set, which is what a lake-scale
+              // consumer needs.) The merged uids are read once and
+              // cached: the count is the merged entry count (one shard
+              // line per key after compaction), and it sizes the
+              // manifest's shards from the uids alone.
+              val mergedUids = KeyedJsonSink.readSharded(spark, entriesOut.dir)
                 .select(col("uid")).cache()
               try {
                 val merged = mergedUids.count()
                 KeyedJsonSink.mergeSharded(
                   mergedUids.select(col("uid"), lit("en-us").as("locale")),
-                  "uid", s"$outDir/master/entries/$m-sharded")
-                Files.deleteIfExists(Paths.get(s"$outDir/master/entries/$m.json"))
+                  "uid", s"$manifest-sharded")
+                Files.deleteIfExists(Paths.get(s"$manifest.json"))
                 merged
               } finally { mergedUids.unpersist(); () }
-            }
+          }
           logger.log(s"Exported $m", Map("entries" -> n))
           n
       }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * null, 4) — libs/export/authors.js:51-56). Merge semantics are
   * read-modify-write with last-write-wins per key (SURVEY.md §1.4).
   *
-  * Two modes:
+  * One merge call, [[merge]], per [[Output]]: an output named once by
+  * its single file and its sharded dir. The call picks one of two arms:
   *  - [[writeSingle]]: the reference-compatible single pretty-printed
   *    file. Bounded driver-side materialization — correct for entry
   *    counts that fit one import file (the reference's contract), wrong
@@ -23,12 +24,12 @@ import org.apache.spark.sql.functions._
   *    (no schema inference, no null-field dropping, no cross-entry type
   *    coercion), and the file is replaced with an atomic temp-file move
   *    so a crash mid-write cannot corrupt existing state.
-  *  - [[writeSharded]]: the scale path — entries stay distributed, hashed
+  *  - [[mergeSharded]]: the scale path — entries stay distributed, hashed
   *    into N shard files of JSON-lines (uid TAB json), mergeable by
   *    re-sharding on uid. Compaction = groupBy shard with last-wins. N
   *    follows the bytes being written (see [[sizedShards]]): one shard
   *    per Spark read split, so a few MB land in one file and 100 TB in
-  *    ~128 MB shards.
+  *    ~128 MB shards. The first sharded merge absorbs the single file.
   */
 object KeyedJsonSink {
 
@@ -173,17 +174,65 @@ object KeyedJsonSink {
   private def escapeKey(k: String): String =
     "\"" + k.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
+  /** One keyed-JSON output: the reference's single pretty-printed `file`
+    * and the sharded `dir` that takes over from it at scale. */
+  final case class Output(file: String, dir: String)
+
+  /** The arm a [[merge]] took. */
+  sealed trait Merged
+  /** The single file was written: `delta` holds the delta's (uid, json)
+    * pairs in collect order, `count` the keys now in the file. */
+  final case class SingleFile(delta: Seq[(String, String)], count: Long)
+    extends Merged
+  /** The state lives in the sharded dir. */
+  case object Sharded extends Merged
+
+  /** Merge `delta`, which has `rows` rows, into `out` with last-wins per
+    * uid, dropping `removeKeys`. The single file is written while the
+    * delta fits the driver (`rows` <= `maxDriverRows`) and no sharded
+    * state exists; otherwise the merge is sharded, absorbs the single
+    * file, and every later merge stays sharded. Sharded state is looked
+    * up through Hadoop FS, where the shards live (an `hdfs://` or
+    * `s3a://` dir would read as absent through java.nio). A swap parked
+    * at `.old` by a crash is sharded state too: [[mergeSharded]]
+    * restores it. */
+  def merge(delta: DataFrame, uidCol: String, out: Output, rows: Long,
+            maxDriverRows: Long,
+            removeKeys: Option[DataFrame] = None): Merged = {
+    val fs = new HPath(out.dir).getFileSystem(
+      delta.sparkSession.sessionState.newHadoopConf())
+    val shardedState =
+      Seq(out.dir, out.dir + ".old").exists(d => fs.exists(new HPath(d)))
+    if (rows <= maxDriverRows && !shardedState) {
+      val (collected, n) = mergeSingle(delta, uidCol, out.file, removeKeys)
+      SingleFile(collected, n)
+    } else {
+      mergeSharded(delta, uidCol, out.dir, removeKeys = removeKeys,
+        legacyFile = Some(out.file))
+      Sharded
+    }
+  }
+
   /** Merge `entries` into the keyed-JSON file at `path` (new rows win;
     * `removeKeys` are dropped — the dead-letter remove-on-success path,
     * reference assets.js:135-137), write pretty-printed atomically,
     * return the merged row count. Driver-side by design — see class
     * doc. Entries absent from the delta keep their raw JSON text. */
   def writeSingle(entries: DataFrame, uidCol: String, path: String,
-                  prettyPrint: Boolean = true,
-                  removeKeys: Set[String] = Set.empty): Long = {
-    val fresh: Seq[(String, String)] =
-      keyed(entries, uidCol).collect().map(r => r.getString(0) -> r.getString(1))
-        .toMap.toSeq // dedup within the delta: last collected row wins
+                  removeKeys: Option[DataFrame] = None): Long =
+    mergeSingle(entries, uidCol, path, removeKeys)._2
+
+  /** [[writeSingle]], also returning the delta's (uid, json) pairs in
+    * collect order. Only keys in the prior file or the delta can be
+    * removed, so only those are collected from `removeKeys`: the driver
+    * holds a set bounded by the file even when `removeKeys` spans a
+    * whole corpus. */
+  private def mergeSingle(entries: DataFrame, uidCol: String, path: String,
+                          removeKeys: Option[DataFrame])
+      : (Seq[(String, String)], Long) = {
+    val collected: Seq[(String, String)] = keyed(entries, uidCol).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSeq
+    val fresh = collected.toMap.toSeq // dedup: last collected row wins
     val freshKeys = fresh.map(_._1).toSet
     val p = Paths.get(path)
     val existing: Seq[(String, String)] =
@@ -191,28 +240,24 @@ object KeyedJsonSink {
         topLevelEntries(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
           .map { case (k, v) => k -> minify(v) }
       else Seq.empty
-    // last-wins: fresh replaces existing per key; removeKeys dropped
+    val candidates = freshKeys ++ existing.map(_._1)
+    val removed: Set[String] = removeKeys match {
+      case Some(rm) if candidates.nonEmpty =>
+        rm.select(col(rm.columns.head).cast("string").as("uid"))
+          .filter(col("uid").isin(candidates.toSeq: _*))
+          .collect().map(_.getString(0)).toSet
+      case _ => Set.empty
+    }
+    // last-wins: fresh replaces existing per key; removed keys dropped
     val merged = (existing.filterNot { case (k, _) =>
-      freshKeys(k) || removeKeys(k)
-    } ++ fresh.filterNot { case (k, _) => removeKeys(k) })
+      freshKeys(k) || removed(k)
+    } ++ fresh.filterNot { case (k, _) => removed(k) })
       .sortBy(_._1)
     val body = merged
       .map { case (k, v) => escapeKey(k) + ": " + v }
       .mkString("{", ", ", "}")
-    AtomicFile.write(p, (if (prettyPrint) pretty(body) else body)
-      .getBytes(StandardCharsets.UTF_8))
-    merged.length.toLong
-  }
-
-  /** Scale path: distributed JSON-lines shards keyed by uid hash. Merging
-    * a delta = union previous shards + delta, last-wins on uid, rewrite
-    * (one shuffle, no driver materialization) — see [[mergeSharded]].
-    * `shards` > 0 pins the shard count; the default sizes it from the
-    * entries ([[sizedShards]]). */
-  def writeSharded(entries: DataFrame, uidCol: String, dir: String,
-                   shards: Int = 0): Unit = {
-    val n = if (shards > 0) shards else sizedShards(entries, 0L)
-    writeShardFiles(keyed(entries, uidCol).repartition(n, col("uid")), dir, n)
+    AtomicFile.write(p, pretty(body).getBytes(StandardCharsets.UTF_8))
+    (collected, merged.length.toLong)
   }
 
   /** Shard count when Catalyst cannot size the delta (its estimate is

@@ -41,7 +41,7 @@ object LakeLookupBench {
         concat(lit("title-"), $"id").as("title"),
         concat(lit("/posts/"), $"id").as("url")).as("entry"))
       .select($"uid", to_json($"entry").as("json"))
-    KeyedJsonSink.writeSharded(entries, "uid", dir, shards = shards)
+    KeyedJsonSink.mergeSharded(entries, "uid", dir, shards = shards)
     val tWrite = (System.nanoTime() - t0) / 1e9
 
     val fmt = "graft.sources.KeyedJsonSource"

@@ -17,7 +17,7 @@ class KeyedJsonSourceSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0 until 1000)
       .map(i => (i.toString, s"name-$i", i * 2)).toDF("uid", "name", "score")
-    KeyedJsonSink.writeSharded(df, "uid", dir, shards = 8)
+    KeyedJsonSink.mergeSharded(df, "uid", dir, shards = 8)
   }
 
   test("DSv2 read round-trips the sharded sink (all shards, parallel)") {

@@ -149,7 +149,7 @@ class SinkHardeningSpec extends AnyFunSuite {
         .getBytes(StandardCharsets.UTF_8))
     val delta = Seq(("33", "http://x/c")).toDF("uid", "url")
     val n = KeyedJsonSink.writeSingle(delta, "uid", path,
-      removeKeys = Set("11", "33")) // 11 healed; 33 also healed later
+      removeKeys = Some(Seq("11", "33").toDF("uid"))) // 11 healed; 33 also healed later
     assert(n == 1)
     val entries = KeyedJsonSink.topLevelEntries(
       new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)).toMap
@@ -168,13 +168,13 @@ class SinkHardeningSpec extends AnyFunSuite {
       .toDF("uid", "field", "n")
     val rm = Seq("k3", "k20").toDF("uid")
 
-    KeyedJsonSink.writeSharded(base, "uid", shardDir, shards = 4)
+    KeyedJsonSink.mergeSharded(base, "uid", shardDir, shards = 4)
     KeyedJsonSink.mergeSharded(delta, "uid", shardDir, shards = 4,
       removeKeys = Some(rm))
 
     KeyedJsonSink.writeSingle(base, "uid", singlePath)
     KeyedJsonSink.writeSingle(delta, "uid", singlePath,
-      removeKeys = Set("k3", "k20"))
+      removeKeys = Some(rm))
 
     val sharded = KeyedJsonSink.readSharded(spark, shardDir).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -189,6 +189,41 @@ class SinkHardeningSpec extends AnyFunSuite {
     // merge rewrote state, not appended a log.
     val lines = spark.read.text(shardDir).count()
     assert(lines == 41)
+  }
+
+  test("merge picks the single file under the bound, then stays sharded") {
+    import KeyedJsonSink.{Output, Sharded, SingleFile}
+    val root = Files.createTempDirectory("keyedmerge")
+    val out = Output(root.resolve("state.json").toString,
+      root.resolve("sharded").toString)
+    def fileKeys(): Set[String] = KeyedJsonSink.topLevelEntries(new String(
+      Files.readAllBytes(Paths.get(out.file)), StandardCharsets.UTF_8)).map(_._1).toSet
+    def shardKeys(): Set[String] =
+      KeyedJsonSink.readSharded(spark, out.dir).collect().map(_.getString(0)).toSet
+    def merge(uids: Seq[String], max: Long, rm: Seq[String] = Nil) =
+      KeyedJsonSink.merge(uids.map(u => (u, s"v$u")).toDF("uid", "v"), "uid",
+        out, uids.size.toLong, max, Some(rm.toDF("uid")))
+
+    assert(merge(Seq("a", "b"), max = 2) == SingleFile(
+      Seq("a" -> """{"v":"va"}""", "b" -> """{"v":"vb"}"""), 2))
+    // removals reach keys of the prior file and of the delta
+    assert(merge(Seq("c", "d"), max = 2, rm = Seq("a", "d", "zz")) ==
+      SingleFile(Seq("c" -> """{"v":"vc"}""", "d" -> """{"v":"vd"}"""), 2))
+    assert(fileKeys() == Set("b", "c"))
+    assert(!Files.exists(Paths.get(out.dir)))
+
+    // past the bound: sharded, the single file absorbed and deleted
+    assert(merge(Seq("e", "f", "g"), max = 2, rm = Seq("c")) == Sharded)
+    assert(!Files.exists(Paths.get(out.file)))
+    assert(shardKeys() == Set("b", "e", "f", "g"))
+    // under the bound again, sharded state keeps the merge sharded
+    assert(merge(Seq("h"), max = 2) == Sharded)
+    assert(shardKeys() == Set("b", "e", "f", "g", "h"))
+    // so does a swap parked at .old by a crash, which the merge restores
+    Files.move(Paths.get(out.dir), Paths.get(out.dir + ".old"))
+    assert(merge(Seq("i"), max = 2) == Sharded)
+    assert(!Files.exists(Paths.get(out.file)))
+    assert(shardKeys() == Set("b", "e", "f", "g", "h", "i"))
   }
 
   test("mergeSharded absorbs a legacy writeSingle file once") {
@@ -211,7 +246,7 @@ class SinkHardeningSpec extends AnyFunSuite {
   test("mergeSharded self-heals an interrupted swap from the .old backup") {
     val dir = Files.createTempDirectory("shardheal")
     val shardDir = dir.resolve("state").toString
-    KeyedJsonSink.writeSharded(
+    KeyedJsonSink.mergeSharded(
       Seq(("a", "1"), ("b", "2")).toDF("uid", "x"), "uid", shardDir, shards = 2)
     // simulate a crash that landed between rename(dir -> .old) and
     // rename(tmp -> dir): live dir missing, backup present
@@ -258,7 +293,7 @@ class SinkHardeningSpec extends AnyFunSuite {
     try {
       val base = (0 until 1000).map(i => (i.toString, s"name-$i", i * 2))
         .toDF("uid", "name", "score")
-      KeyedJsonSink.writeSharded(base, "uid", dir, shards = 8)
+      KeyedJsonSink.mergeSharded(base, "uid", dir, shards = 8)
       assert(shardLayout(dir) == (8, 8))
 
       KeyedJsonSink.mergeSharded(Seq(("42", "renamed", -1))
@@ -294,9 +329,13 @@ class SinkHardeningSpec extends AnyFunSuite {
       case qs: QueryStageExec => qs +: nodes(qs.plan)
       case _ => p +: p.children.flatMap(nodes)
     }
-    val dir = Files.createTempDirectory("shardonce").resolve("state").toString
-    KeyedJsonSink.writeSharded((1 to 100).map(i => (s"k$i", i)).toDF("uid", "n"),
-      "uid", dir, shards = 4)
+    val root = Files.createTempDirectory("shardonce")
+    val dir = root.resolve("state").toString
+    // the base write is a merge too: it runs under another name and is
+    // moved into place, so its late listener event cannot match below
+    KeyedJsonSink.mergeSharded((1 to 100).map(i => (s"k$i", i)).toDF("uid", "n"),
+      "uid", root.resolve("base").toString, shards = 4)
+    Files.move(root.resolve("base"), root.resolve("state"))
     // the merge writes its new state under `<dir>.tmp-*`
     def mergeWrite(qe: QueryExecution): Boolean = nodes(qe.executedPlan).exists {
       case w: DataWritingCommandExec => w.cmd match {

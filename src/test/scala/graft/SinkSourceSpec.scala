@@ -38,7 +38,7 @@ class SinkSourceSpec extends AnyFunSuite {
   test("KeyedJsonSink.writeSharded keeps entries distributed and re-readable") {
     val dir = Files.createTempDirectory("shard").toString + "/out"
     val entries = (1 to 100).map(i => (s"u$i", i)).toDF("uid", "v")
-    KeyedJsonSink.writeSharded(entries, "uid", dir, shards = 8)
+    KeyedJsonSink.mergeSharded(entries, "uid", dir, shards = 8)
     val back = spark.read.text(dir)
       .select(split($"value", "\t").getItem(0).as("uid"),
         get_json_object(split($"value", "\t").getItem(1), "$.v").cast("int").as("v"))

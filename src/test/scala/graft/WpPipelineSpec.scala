@@ -321,6 +321,48 @@ class WpPipelineSpec extends AnyFunSuite {
     assert(manifest == Set("16", "18", "20"))
   }
 
+  test("single-file state moves into sharded state when the driver bound drops") {
+    import graft.sinks.KeyedJsonSink
+    val outDir = Files.createTempDirectory("wpshift").toString
+    def keys(path: String): Set[String] = KeyedJsonSink.topLevelEntries(
+      new String(Files.readAllBytes(Paths.get(path)), "UTF-8")).map(_._1).toSet
+    def shardKeys(dir: String): Set[String] =
+      KeyedJsonSink.readSharded(spark, dir).collect().map(_.getString(0)).toSet
+    val entryModules = Seq("authors", "categories", "posts")
+
+    FlakyImg6.failing = true
+    new Orchestrator(spark, cat, outDir, FlakyImg6.fetcher).run()
+    val entries1 =
+      entryModules.map(m => m -> keys(s"$outDir/entries/$m/en-us.json")).toMap
+    val manifest1 = entryModules.map { m =>
+      val locales = KeyedJsonSink.topLevelEntries(new String(Files.readAllBytes(
+        Paths.get(s"$outDir/master/entries/$m.json")), "UTF-8")).toMap
+      m -> KeyedJsonSink.topLevelEntries(locales("en-us")).map(_._1).toSet
+    }.toMap
+    assert(keys(s"$outDir/assets/assets.json") == Set("5", "7"))
+    assert(keys(s"$outDir/master/wp_failed.json") == Set("6"))
+
+    // same outDir, bound 0, img6 healed: every output crosses to the
+    // sharded arm. A dead letter of zero rows fits any bound, so img7
+    // (re-fetched: its file is gone) fails now to give it one.
+    FlakyImg6.failing = false
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/assets/7"))
+    val img7Fails: HttpFetchSink.Fetcher = url =>
+      if (url.contains("img7")) Left("ECONNREFUSED") else Right(url.getBytes("UTF-8"))
+    new Orchestrator(spark, cat, outDir, img7Fails, maxDriverManifest = 0).run()
+    entryModules.foreach { m =>
+      assert(!Files.exists(Paths.get(s"$outDir/entries/$m/en-us.json")), m)
+      assert(shardKeys(s"$outDir/entries/$m/sharded") == entries1(m), m)
+      assert(!Files.exists(Paths.get(s"$outDir/master/entries/$m.json")), m)
+      assert(manifest1(m).nonEmpty &&
+        manifest1(m).subsetOf(shardKeys(s"$outDir/master/entries/$m-sharded")), m)
+    }
+    assert(!Files.exists(Paths.get(s"$outDir/assets/assets.json")))
+    assert(shardKeys(s"$outDir/assets/sharded") == Set("5", "6", "7"))
+    assert(!Files.exists(Paths.get(s"$outDir/master/wp_failed.json")))
+    assert(shardKeys(s"$outDir/master/wp_failed") == Set("7"))
+  }
+
   test("contenttypes config drives module order, column order, and S11 logs") {
     val outDir = Files.createTempDirectory("wpcts").toString
     val orch = new Orchestrator(spark, cat, outDir, _ => Right(Array[Byte](1)),
